@@ -12,6 +12,17 @@ import graft.engine.Aggregations.AggSpec
   * Stage boundaries materialize to parquet for replayability (the
   * reference's status-file gating); within a stage everything stays lazy so
   * Catalyst fuses the selected transforms into one codegen'd pass.
+  *
+  * Within a stage the tables are independent, so their per-table work
+  * runs concurrently ([[Tables.concurrently]], at most `defaultParallelism`
+  * tables at a time): schema resolution in [[Tables.load]], the
+  * [[Transforms.imputeNulls]] census in [[Transforms.transformAll]], and
+  * one parquet write per table in [[Tables.writeAll]]. Each table is a
+  * chain of small jobs plus driver time between them (planning, commit,
+  * listing); run one after another, the cores idle through that driver
+  * time. Extraction stays serial: [[Extraction.runJob]] calls `Store`
+  * methods from the caller's thread, and a store (a JDBC connection
+  * included) is not required to be thread-safe.
   * Time-based scheduling (O2/O3) is driver-side orchestration outside the
   * engine core; the streaming-native upgrade path for recurring incremental
   * loads is graft.streaming.IncrementalStream.

@@ -73,19 +73,35 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[
       String, org.apache.spark.sql.types.StructType]()
 
-  private def listingKey(root: java.io.File): String = {
-    def walk(x: java.io.File): Seq[java.io.File] =
-      if (x.isDirectory)
-        Option(x.listFiles()).getOrElse(Array.empty[java.io.File])
-          .sortBy(_.getName).toSeq.flatMap(walk)
-      else Seq(x)
-    val listing = walk(root)
-      .map(p => s"${p.getPath.stripPrefix(root.getPath)}:${p.length}:" +
-        s"${p.lastModified}")
+  /** The cache key of `path`: its qualified URI plus a digest of every
+    * file's relative path, size and mtime under it. Listed through the
+    * session's Hadoop `FileSystem`, like every read and write of the
+    * layer: a `file:`/`hdfs://`/`s3a://` URI names no local
+    * `java.io.File`, and a local-file walk gave every such path one
+    * constant empty listing, so a rewritten table kept serving its
+    * first schema. None when the path does not exist, so the read
+    * fails with Spark's own error and nothing is cached.
+    */
+  private def listingKey(spark: SparkSession, path: String): Option[String] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(p)
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory)
+        fs.listStatus(st.getPath).sortBy(_.getPath.getName).toSeq.flatMap(walk)
+      else Seq(st)
+    val files =
+      try walk(fs.getFileStatus(root))
+      catch { case _: java.io.FileNotFoundException => return None }
+    val prefix = root.toString
+    val listing = files
+      .map(f => s"${f.getPath.toString.stripPrefix(prefix)}:${f.getLen}:" +
+        s"${f.getModificationTime}")
       .mkString("|")
-    root.getAbsolutePath + "#" + java.util.Arrays.hashCode(
+    Some(prefix + "#" + java.util.Arrays.hashCode(
       java.security.MessageDigest.getInstance("MD5")
-        .digest(listing.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+        .digest(listing.getBytes(java.nio.charset.StandardCharsets.UTF_8))))
   }
 
   /** Schema-cached parquet read of an immutable-while-referenced path
@@ -95,16 +111,18 @@ object Tables {
     * serves the artifact store's loaders, whose serve rows otherwise
     * pay one inference job per evaluation.
     */
-  def parquetCached(spark: SparkSession, path: String): DataFrame = {
-    val key = listingKey(new java.io.File(path))
-    val cached = schemaCache.get(key)
-    if (cached != null) spark.read.schema(cached).parquet(path)
-    else {
-      val d = spark.read.parquet(path)
-      schemaCache.put(key, d.schema)
-      d
+  def parquetCached(spark: SparkSession, path: String): DataFrame =
+    listingKey(spark, path) match {
+      case Some(key) =>
+        val cached = schemaCache.get(key)
+        if (cached != null) spark.read.schema(cached).parquet(path)
+        else {
+          val d = spark.read.parquet(path)
+          schemaCache.put(key, d.schema)
+          d
+        }
+      case None => spark.read.parquet(path)
     }
-  }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     // the nanosAsLong flag is session-scoped and Spark exposes no
@@ -163,10 +181,60 @@ object Tables {
       floor(c.cast("decimal(20,0)") / lit(1000)).cast("long"))
   }
 
-  /** Load a whole layer as a table set. Lazy: no IO until an action. */
+  /** Run `f` over `items` on up to `min(items, defaultParallelism)`
+    * threads and return the results in input order. A stage's per-table
+    * work is a chain of small Spark jobs plus driver time between them
+    * (planning, commit, listing); run one table after another, the
+    * cores idle through each table's driver time.
+    *
+    * Each item runs through `SQLExecution.withThreadLocalCaptured`, the
+    * path adaptive query execution submits its stages through: jobs
+    * keep the caller's local properties (job group, description,
+    * scheduler pool, any tracing key) and active session. Every call
+    * gets its own threads, so a nested call cannot starve its parent.
+    * One item, or one core, runs inline on the caller's thread.
+    *
+    * Waits for every item, then rethrows the first failure in input
+    * order: nothing is still running when the call returns or throws.
+    *
+    * Only table-set work whose items touch nothing but Spark uses it.
+    * [[Extraction.runJob]] stays serial: it calls `Store` methods from
+    * the caller's thread, and a store (a JDBC connection included) is
+    * not required to be thread-safe.
+    */
+  private[graft] def concurrently[A, B](spark: SparkSession, items: Seq[A])(
+      f: A => B): Seq[B] = {
+    val n = math.min(items.size, spark.sparkContext.defaultParallelism)
+    if (n <= 1) return items.map(f)
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(n, r => {
+      val t = new Thread(r, "graft-concurrently")
+      t.setDaemon(true)
+      t
+    })
+    try {
+      val futures = items.map(a =>
+        org.apache.spark.sql.execution.SQLExecution
+          .withThreadLocalCaptured(session, pool)(f(a)))
+      val results = futures.map(fu => scala.util.Try(fu.join()))
+      results.foreach {
+        case scala.util.Failure(e: java.util.concurrent.CompletionException)
+            if e.getCause != null => throw e.getCause
+        case scala.util.Failure(e) => throw e
+        case _ =>
+      }
+      results.map(_.get)
+    } finally pool.shutdown()
+  }
+
+  /** Load a whole layer as a table set. Lazy: no IO until an action.
+    * Each table's schema resolution (a listing, plus a footer-reading
+    * job the first time a listing is seen) runs [[concurrently]] with
+    * the others, at most `defaultParallelism` tables at a time.
+    */
   def load(spark: SparkSession, dir: String,
            names: Seq[String] = all): Map[String, DataFrame] =
-    names.map(n => n -> table(spark, dir, n)).toMap
+    names.zip(concurrently(spark, names)(table(spark, dir, _))).toMap
 
   /** Register a table set as temp views so spark.sql resolves them (Q1). */
   def registerViews(tables: Map[String, DataFrame]): Unit =
@@ -196,13 +264,25 @@ object Tables {
     df.write.mode(mode).parquet(s"$dir/$name.parquet")
 
   /** S10 bulk loader: write every table with a name prefix
-    * (transformations_code.py:206-213).
+    * (transformations_code.py:206-213). The tables' writes run
+    * [[concurrently]], at most `defaultParallelism` at a time; each
+    * carries the job description `writeAll <layer>/<table>`, so its
+    * jobs say which table they write.
+    * Returns once every write has finished; a failed write is rethrown
+    * after the others have completed.
     */
   def writeAll(tables: Map[String, DataFrame], dir: String,
                prefix: String = ""): Unit =
-    tables.foreach { case (n, df) =>
-      val out = if (prefix.isEmpty) n else s"${prefix}_$n"
-      write(df, dir, out)
+    tables.headOption.foreach { case (_, first) =>
+      val sc = first.sparkSession.sparkContext
+      val layer = new org.apache.hadoop.fs.Path(dir).getName
+      concurrently(first.sparkSession, tables.toSeq) { case (n, df) =>
+        val out = if (prefix.isEmpty) n else s"${prefix}_$n"
+        val before = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(s"writeAll $layer/$out")
+        try write(df, dir, out)
+        finally sc.setJobDescription(before)
+      }
     }
 
   /** S9 CSV sink (mapping.py:183-185 store_dataset). Header on; still a

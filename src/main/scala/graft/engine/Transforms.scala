@@ -200,10 +200,18 @@ object Transforms {
   def pipeline(selected: Seq[String])(df: DataFrame): DataFrame =
     selected.foldLeft(df)((d, name) => registry.get(name).fold(d)(_(d)))
 
-  /** Whole-table-set map (transformations_code.py:150-162). */
+  /** Whole-table-set map (transformations_code.py:150-162). Tables
+    * are independent, so their plans build [[Tables.concurrently]]:
+    * the eager parts (the [[imputeNulls]] census job) overlap.
+    */
   def transformAll(tables: Map[String, DataFrame],
                    selected: Seq[String]): Map[String, DataFrame] =
-    tables.map { case (n, df) => n -> pipeline(selected)(df) }
+    tables.headOption.fold(tables) { case (_, first) =>
+      val named = tables.toSeq
+      named.map(_._1).zip(Tables.concurrently(first.sparkSession, named) {
+        case (_, df) => pipeline(selected)(df)
+      }).toMap
+    }
 }
 
 /** Deterministic replacement for dateutil.parser.parse(dayfirst=True,
